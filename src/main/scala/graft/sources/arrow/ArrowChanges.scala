@@ -80,17 +80,15 @@ object ArrowChanges {
     // CONSTRUCTION — short-circuit before the general path scans the
     // rewritten generation AND its originals (O(2× table) for a full
     // compaction) only to cancel them in the exceptAll.
-    val neutral = ArrowDataSource.neutralEpochs(root)
-    val onlyNeutral = !ArrowDataSource.committedHistory(root)
+    val log = ArrowDataSource.readLog(root)
+    val onlyNeutral = !log.history
       .exists(en => en.epoch > from && en.epoch <= to &&
-        !neutral(en.epoch))
+        !log.neutralEpochs(en.epoch))
     if (onlyNeutral)
       return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
         .withColumn(ChangeTypeCol, lit("insert"))
-    val fromSet = ArrowDataSource.liveEntries(root, Some(from))
-      .map(_._2).toSet
-    val toSet = ArrowDataSource.liveEntries(root, Some(to))
-      .map(_._2).toSet
+    val fromSet = log.liveEntries(Some(from)).map(_._2).toSet
+    val toSet = log.liveEntries(Some(to)).map(_._2).toSet
     val added = (toSet -- fromSet).toSeq.sorted
     val removed = (fromSet -- toSet).toSeq.sorted
     // Merge-on-read deletes churn ROWS without churning files: a
@@ -98,8 +96,8 @@ object ArrowChanges {
     // joins BOTH sides, each read pinned (epochAsOf) to its side's
     // vector — the anti-diff then emits exactly the newly masked rows
     // as deletes. Cost stays O(churned + dv-changed bytes).
-    val dvFrom = ArrowDataSource.liveDvs(root, Some(from))
-    val dvTo = ArrowDataSource.liveDvs(root, Some(to))
+    val dvFrom = log.liveDvs(Some(from))
+    val dvTo = log.liveDvs(Some(to))
     val dvChanged = (fromSet intersect toSet)
       .filter(rel => dvFrom.get(rel) != dvTo.get(rel)).toSeq.sorted
     def readFiles(rels: Seq[String], asOf: Long): DataFrame =
@@ -128,27 +126,23 @@ object ArrowChanges {
       partFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val prefix = Paths.get(path).toAbsolutePath.normalize
-    val neutral = ArrowDataSource.neutralEpochs(root)
+    val log = ArrowDataSource.readLog(root)
     // UPDATE-stamped epochs tag pre/postimages instead of plain
-    // delete/insert (see the tag constants' contract note). One more
-    // O(metadata) pass per planning call, same cost class as the
-    // neutralEpochs read above — both fold into the compact snapshot,
-    // so the tail stays short on any compacted log
-    val updates = ArrowDataSource.opKinds(root)
-      .filter(_._2 == OpUpdate).keySet
-    // DV state per window epoch, resolved lazily once per epoch: a
+    // delete/insert (see the tag constants' contract note)
+    val updates = log.opKinds.filter(_._2 == OpUpdate).keySet
+    // DV state per window epoch, folded lazily once per epoch: a
     // remove/add split must apply the vector LIVE at its boundary, or
     // the feed re-delivers rows an earlier dv epoch already deleted
     // (and drops a restore's resurrection of masked rows)
-    val dvAt = scala.collection.mutable.Map
+    val dvMemo = scala.collection.mutable.Map
       .empty[Long, Map[String, (String, Long)]]
-    def dvOf(epoch: Long, rel: String): Option[String] =
-      dvAt.getOrElseUpdate(epoch, ArrowDataSource.liveDvs(root,
-        Some(epoch))).get(rel)
-        .map { case (dvRel, _) => root.resolve(dvRel).normalize.toString }
-    val entries = ArrowDataSource.committedHistory(root)
+    def dvAt(epoch: Long, rel: String): Option[(String, Long)] =
+      dvMemo.getOrElseUpdate(epoch, log.liveDvs(Some(epoch))).get(rel)
+    def dvOf(epoch: Long, rel: String): Option[String] = dvAt(epoch, rel)
+      .map { case (dvRel, _) => root.resolve(dvRel).normalize.toString }
+    val entries = log.history
       .filter(en => en.epoch > after && en.epoch <= upTo)
-      .filterNot(en => neutral(en.epoch))
+      .filterNot(en => log.neutralEpochs(en.epoch))
       .filter(en => root.resolve(en.rel).normalize.startsWith(prefix))
     // partition-column predicates prune churned files EXACTLY (the
     // value is constant per directory), same as the ordinary scan —
@@ -202,7 +196,8 @@ object ArrowChanges {
             // (new vector minus the previous one, dvInvert selection),
             // so the feed delivers the deleted rows themselves, no
             // carry-over pairs to cancel
-            val dvAbs = diffSidecar(root, en.epoch, en.rel, dvRel)
+            val dvAbs = diffSidecar(root, en.epoch, en.rel, dvRel,
+              dvAt(en.epoch - 1, en.rel))
             Some(ArrowFilePartition(f.toString, (0 until nBlocks).toArray,
               partVals, -1, delTag, en.epoch,
               dvFile = dvAbs, dvInvert = true)
@@ -212,14 +207,14 @@ object ArrowChanges {
   }
 
   /** The bitmap of rows epoch `epoch` newly masked on `rel`: its
-    * committed vector minus the previous live one. First-delete epochs
-    * reuse the committed sidecar unchanged; re-deletes materialize a
-    * derived `cdf_<epoch>_<hash>.dv` sidecar once (deterministic name,
-    * exists-check idempotent — vectors are immutable once committed). */
+    * committed vector minus `prev`, the one live at `epoch - 1`.
+    * First-delete epochs reuse the committed sidecar unchanged;
+    * re-deletes materialize a derived `cdf_<epoch>_<hash>.dv` sidecar
+    * once (deterministic name, exists-check idempotent — vectors are
+    * immutable once committed). */
   private def diffSidecar(root: java.nio.file.Path, epoch: Long,
-      rel: String, dvRel: String): String = {
+      rel: String, dvRel: String, prev: Option[(String, Long)]): String = {
     val committed = root.resolve(dvRel).normalize
-    val prev = ArrowDataSource.liveDvs(root, Some(epoch - 1)).get(rel)
     prev match {
       case None => committed.toString
       case Some((prevRel, _)) =>
@@ -327,10 +322,10 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
     * delivered by the epochs that first inserted them. */
   private def windowEntries(after: Long, upTo: Long)
       : Seq[ArrowDataSource.LogEntry] = {
-    val neutral = ArrowDataSource.neutralEpochs(root)
-    ArrowDataSource.committedHistory(root)
+    val log = ArrowDataSource.readLog(root)
+    log.history
       .filter(en => en.epoch > after && en.epoch <= upTo)
-      .filterNot(en => neutral(en.epoch))
+      .filterNot(en => log.neutralEpochs(en.epoch))
       .filter(en => root.resolve(en.rel).normalize.startsWith(prefix))
   }
 

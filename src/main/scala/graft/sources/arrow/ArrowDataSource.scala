@@ -763,44 +763,6 @@ object ArrowDataSource {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Every known epoch→commit-millis mapping under `root`'s log:
-    * explicit `.ts` markers win, then compact-snapshot `#ts` headers,
-    * then manifest mtimes (pre-stamping epochs). */
-  def epochTimestamps(root: Path): Map[Long, Long] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Map.empty
-    val files = listDir(md)
-    val names = files.map(_.getFileName.toString)
-    val fromCompact: Map[Long, Long] =
-      names.filter(_.endsWith(".compact")).map(epochOf).sorted.lastOption
-        .toSeq.flatMap { e =>
-          Files.readAllLines(md.resolve(s"$e.compact")).asScala
-            .filter(_.startsWith("#ts\t")).flatMap { l =>
-              l.split('\t') match {
-                case Array(_, ep, ts) => Some((ep.toLong, ts.toLong))
-                case _ => None
-              }
-            }
-        }.toMap
-    // A concurrent compactLog/vacuum may reclaim a manifest between
-    // the listing above and this stat — skip files that vanished
-    // (their stamps are already folded into the snapshot's `#ts`
-    // headers) instead of crashing a racing TIMESTAMP AS OF read.
-    val fromMtime: Map[Long, Long] =
-      names.filter(_.endsWith(".manifest")).flatMap { n =>
-        scala.util.Try(
-          (epochOf(n), Files.getLastModifiedTime(md.resolve(n)).toMillis)
-        ).toOption
-      }.toMap
-    val fromMarkers: Map[Long, Long] =
-      names.filter(_.endsWith(".ts")).flatMap { n =>
-        Files.readAllLines(md.resolve(n)).asScala.headOption
-          .map(t => (epochOf(n), t.trim.toLong))
-      }.toMap
-    fromMtime ++ fromCompact ++ fromMarkers
-  }
-
   /** Data-neutral maintenance marker: a compaction/z-order epoch
     * rewrites the SAME row multiset into new files, so change-feed
     * consumers must not see its churn (Delta CDF's OPTIMIZE
@@ -815,7 +777,6 @@ object ArrowDataSource {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Epochs marked data-neutral (markers + compact-snapshot headers). */
   /** Re-run a log read that raced a CONCURRENT PROCESS's compactLog:
     * between our directory listing and the file read, the compactor
     * deletes covered manifests / `.ts` / `.neutral` markers / older
@@ -838,22 +799,11 @@ object ArrowDataSource {
     throw new IllegalStateException("unreachable")
   }
 
-  def neutralEpochs(root: Path): Set[Long] = retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Set.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val markers = names.filter(_.endsWith(".neutral")).map(epochOf)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#neutral\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep) => Some(ep.toLong)
-            case _ => None
-          })
-      }
-    (markers ++ folded).toSet
-  }
+  /** A value written into a tab-separated log line must hold neither a
+    * field separator nor a line break (readers split lines on `\r`
+    * as well as `\n`). */
+  private def requireLogField(what: String, v: String): Unit =
+    require(!v.exists("\t\n\r".contains(_)), s"arrow log: bad $what '$v'")
 
   /** Writer-transaction stamps (Delta's `txn` action). A foreachBatch
     * writer replayed after a crash re-delivers its last micro-batch;
@@ -878,6 +828,7 @@ object ArrowDataSource {
     * the caller holds the MERGE statement, not the commit call. */
   def withPendingTxn[T](dir: String, appId: String, version: Long)
       (body: => T): T = {
+    requireLogField("writer-transaction appId", appId)
     val key = Paths.get(dir).toAbsolutePath.normalize.toString
     // putIfAbsent, NOT put-then-check: a losing second registration
     // must fail WITHOUT replacing the winner's stamp — otherwise the
@@ -914,104 +865,193 @@ object ArrowDataSource {
     try body finally { pendingCopies.remove(key); () }
   }
 
-  /** Every ledgered source file: `(epoch, b64 path, size)` from
-    * manifest `#copy` headers (tail epochs) plus compact-snapshot
-    * `#copy` headers (folded epochs). */
-  def copiedFiles(root: Path): Seq[(Long, String, Long)] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#copy\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep, k, sz) => Some((ep.toLong, k, sz.toLong))
-            case _ => None
-          })
-      }
-    val tail = names.filter(_.endsWith(".manifest")).flatMap { n =>
-      scala.util.Try(Files.readAllLines(md.resolve(n)).asScala
-        .filter(_.startsWith("#copy\t"))
-        .flatMap(_.split('\t') match {
-          case Array(_, k, sz) => Some((epochOf(n), k, sz.toLong))
-          case _ => None
-        })).getOrElse(Seq.empty)
+  /** One consistent read of `root`'s commit log (see [[readLog]]). The
+    * methods are pure folds over it, so a caller needing several
+    * projections (the live set at two versions, neutral epochs, op
+    * kinds) reads the log once and sees one version of it.
+    *
+    *  - `history`: every committed event in epoch order — the latest
+    *    compact snapshot's, then each tail manifest's.
+    *  - `epochTimestamps`: epoch → commit millis. `.ts` markers win,
+    *    then snapshot `#ts` headers, then tail-manifest mtimes (epochs
+    *    from before stamping).
+    *  - `neutralEpochs`: `.neutral` markers plus `#neutral` headers.
+    *  - `txnStamps`: `(epoch, appId, version)` from `#txn` headers.
+    *  - `copiedFiles`: `(epoch, b64 path, size)` from `#copy` headers.
+    *  - `opKinds`: epoch → operation kind from `#op` headers (Delta's
+    *    commitInfo operation, reduced to what the change feed needs: an
+    *    UPDATE epoch's churn is tagged pre/postimage, not
+    *    delete/insert). */
+  final case class LogState(root: Path, history: Seq[LogEntry],
+      epochTimestamps: Map[Long, Long], neutralEpochs: Set[Long],
+      txnStamps: Seq[(Long, String, Long)],
+      copiedFiles: Seq[(Long, String, Long)],
+      opKinds: Map[Long, String]) {
+
+    /** Committed ADD events only — the streaming source's per-epoch
+      * delta view (what files each epoch contributed). */
+    def committedEntries: Seq[(Long, String)] = history.collect {
+      case en if !en.remove && en.dv.isEmpty => (en.epoch, en.rel)
     }
-    folded ++ tail
+
+    /** The live `(addEpoch, rel)` set as of `asOf` (None = now): fold
+      * the history, a removal at `e2 <= asOf` cancelling the add at
+      * `e1 < e2`. This is what makes a DML commit ATOMIC for readers —
+      * the swap from old files to rewritten ones is one manifest
+      * rename, and until it lands every reader keeps resolving the old
+      * set. DV events neither add nor remove a file — they are skipped
+      * here and folded by [[liveDvs]]. */
+    def liveEntries(asOf: Option[Long]): Seq[(Long, String)] = {
+      val live = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      history.foreach { en =>
+        if (asOf.forall(en.epoch <= _) && en.dv.isEmpty) {
+          if (en.remove) live.remove(en.rel)
+          else live.put(en.rel, en.epoch)
+        }
+      }
+      live.toSeq.map { case (rel, e) => (e, rel) }
+    }
+
+    /** The live deletion vector per file as of `asOf` (None = now):
+      * `rel → (dvRel, deletedCount)`. A dv event REPLACES the file's
+      * previous vector (vectors are cumulative — the writer unions old
+      * into new); removing OR re-adding the file clears it (a replaced
+      * file's rows start unmasked). Fold order within an epoch is line
+      * order — removes, adds, then dv events, as the commit writes
+      * them. */
+    def liveDvs(asOf: Option[Long]): Map[String, (String, Long)] = {
+      val dvs = scala.collection.mutable.LinkedHashMap
+        .empty[String, (String, Long)]
+      history.foreach { en =>
+        if (asOf.forall(en.epoch <= _)) en.dv match {
+          case Some(v) => dvs.put(en.rel, v); ()
+          case None => dvs.remove(en.rel); ()
+        }
+      }
+      dvs.toMap
+    }
+
+    /** Greatest version `appId` has committed to this log, if any —
+      * the replay gate: skip batches with version <= this. */
+    def lastTxnVersion(appId: String): Option[Long] =
+      txnStamps.collect { case (_, a, v) if a == appId => v }.maxOption
+
+    /** `TIMESTAMP AS OF` resolution: the greatest epoch whose commit
+      * stamp is at or before `millis` (Delta's contract). The scan is
+      * a FILTER over all epochs, not a prefix take: one non-monotone
+      * stamp (clock skew between commits, or mtime-fallback epochs
+      * interleaved with marker stamps) must not hide every later epoch
+      * whose stamp is eligible. Rapid commits inside one clock tick
+      * still resolve to the greatest epoch of the tick. */
+    def epochForTimestamp(millis: Long): Long = {
+      val byEpoch = epochTimestamps.toSeq.sortBy(_._1)
+      require(byEpoch.nonEmpty,
+        s"arrow timestampAsOf: $root carries no commit log to resolve " +
+          "a timestamp against")
+      val eligible = byEpoch.filter(_._2 <= millis)
+      require(eligible.nonEmpty, {
+        val (e0, t0) = byEpoch.head
+        s"arrow timestampAsOf: $millis predates the table's first " +
+          s"known commit (epoch $e0 at $t0 = " +
+          s"${java.time.Instant.ofEpochMilli(t0)})"
+      })
+      eligible.last._1
+    }
   }
 
-  /** Every recorded `(epoch, appId, version)` stamp: manifest `#txn`
-    * headers (tail epochs) plus compact-snapshot `#txn` headers
-    * (folded epochs). */
+  /** Known `#` header kinds and their field counts after the epoch. A
+    * manifest header is `#kind<TAB>fields` (the epoch is the file's);
+    * a compact snapshot header is `#kind<TAB>epoch<TAB>fields`.
+    * Unknown kinds are skipped. */
+  private val HeaderFields =
+    Map("#ts" -> 1, "#neutral" -> 0, "#txn" -> 2, "#copy" -> 2, "#op" -> 1)
+
+  /** THE read path of the commit log: one listing of `_graft_metadata`,
+    * one read of the latest `.compact` snapshot, one read of each tail
+    * manifest (those past the snapshot's epoch — manifests at or below
+    * it are crash leftovers the snapshot covers) and of each `.ts`
+    * marker, all under one [[retryVanishedLogRead]]. O(1) snapshot +
+    * O(tail) reads, independent of how many epochs the log has lived.
+    * Any I/O error other than a vanished file propagates, and a known
+    * header with the wrong field count is refused by name: a stamp
+    * read short would let a replay gate re-apply a batch or COPY INTO
+    * re-load a file. */
+  def readLog(root: Path): LogState = retryVanishedLogRead {
+    val md = root.resolve(MetadataDirName)
+    val names =
+      if (Files.isDirectory(md)) listDir(md).map(_.getFileName.toString)
+      else Seq.empty
+    def epochsOf(suffix: String): Seq[Long] =
+      names.filter(_.endsWith(suffix)).map(epochOf).sorted
+    val snapEpoch = epochsOf(".compact").lastOption
+    val events = Vector.newBuilder[LogEntry]
+    val mtimes, headerStamps = scala.collection.mutable.Map.empty[Long, Long]
+    val neutral = scala.collection.mutable.Set.from(epochsOf(".neutral"))
+    val txns, copies = Vector.newBuilder[(Long, String, Long)]
+    val ops = scala.collection.mutable.Map.empty[Long, String]
+    // readString + String.lines: the same line split as readAllLines
+    // (\n, \r, \r\n) without a reader and decoder per small file
+    def lines(f: Path) = Files.readString(f).lines().iterator().asScala
+    def parse(f: Path, manifestEpoch: Option[Long]): Unit =
+      lines(f).foreach { line =>
+        if (!line.startsWith("#")) events += manifestEpoch
+          .fold(parseCompactLine(line))(parseManifestLine(_, line))
+        else {
+          val fields = line.split("\t", -1)
+          val skip = if (manifestEpoch.isEmpty) 2 else 1
+          HeaderFields.get(fields(0)).foreach { n =>
+            def bad = new IllegalArgumentException(
+              s"arrow log: malformed ${fields(0)} header '$line' in $f")
+            if (fields.length != skip + n) throw bad
+            try {
+              val e = manifestEpoch.getOrElse(fields(1).toLong)
+              val v = fields.drop(skip)
+              fields(0) match {
+                case "#ts" => headerStamps(e) = v(0).toLong
+                case "#neutral" => neutral += e
+                case "#txn" => txns += ((e, v(0), v(1).toLong))
+                case "#copy" => copies += ((e, v(0), v(1).toLong))
+                case _ => ops(e) = v(0)
+              }
+            } catch { case _: NumberFormatException => throw bad }
+          }
+        }
+      }
+    snapEpoch.foreach(c => parse(md.resolve(s"$c.compact"), None))
+    val tail = epochsOf(".manifest").filter(e => snapEpoch.forall(e > _))
+    tail.foreach { e =>
+      val f = md.resolve(s"$e.manifest")
+      mtimes(e) = Files.getLastModifiedTime(f).toMillis
+      parse(f, Some(e))
+    }
+    val markers = epochsOf(".ts").flatMap { e =>
+      lines(md.resolve(s"$e.ts")).nextOption().map(t => (e, t.trim.toLong))
+    }
+    LogState(root, events.result(), mtimes.toMap ++ headerStamps ++ markers,
+      neutral.toSet, txns.result(), copies.result(), ops.toMap)
+  }
+
+  // Single-projection shorthands: each reads the whole log once. A
+  // caller needing more than one projection reads it once with
+  // [[readLog]] and folds the value.
+  def committedHistory(root: Path): Seq[LogEntry] = readLog(root).history
+  def epochTimestamps(root: Path): Map[Long, Long] =
+    readLog(root).epochTimestamps
+  def neutralEpochs(root: Path): Set[Long] = readLog(root).neutralEpochs
   def txnStamps(root: Path): Seq[(Long, String, Long)] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#txn\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep, app, v) => Some((ep.toLong, app, v.toLong))
-            case _ => None
-          })
-      }
-    val tail = names.filter(_.endsWith(".manifest")).flatMap { n =>
-      scala.util.Try(Files.readAllLines(md.resolve(n)).asScala
-        .filter(_.startsWith("#txn\t"))
-        .flatMap(_.split('\t') match {
-          case Array(_, app, v) => Some((epochOf(n), app, v.toLong))
-          case _ => None
-        })).getOrElse(Seq.empty)
-    }
-    folded ++ tail
-  }
-
-  /** Greatest version `appId` has committed to this log, if any —
-    * the replay gate: skip batches with version <= this. */
-  def lastTxnVersion(root: Path, appId: String): Option[Long] = {
-    val vs = txnStamps(root).collect { case (_, a, v) if a == appId => v }
-    if (vs.isEmpty) None else Some(vs.max)
-  }
-
-  /** Operation-kind stamps (Delta's commitInfo operation, reduced to
-    * what the change feed needs): a row-level UPDATE commits an
-    * `#op<TAB>update` header INSIDE its epoch manifest — atomic with
-    * the visibility flip, like `#txn` — so the change feed can tag the
-    * epoch's churn `update_preimage`/`update_postimage` instead of
-    * bare delete/insert, letting an external consumer distinguish an
-    * UPDATE from an unrelated delete+insert pair. Manifest form
-    * `#op<TAB>kind`; compact form `#op<TAB>epoch<TAB>kind`. */
-  def opKinds(root: Path): Map[Long, String] = retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Map.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#op\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep, kind) => Some((ep.toLong, kind))
-            case _ => None
-          })
-      }
-    // NO Try-swallow here (unlike the #txn/#copy tails): a manifest a
-    // concurrent compaction reclaims mid-read must RETRY through
-    // retryVanishedLogRead — swallowing it would transiently serve an
-    // UPDATE epoch's churn as plain insert/delete to a raw-tag consumer
-    val tail = names.filter(_.endsWith(".manifest")).flatMap { n =>
-      Files.readAllLines(md.resolve(n)).asScala
-        .filter(_.startsWith("#op\t"))
-        .flatMap(_.split('\t') match {
-          case Array(_, kind) => Some((epochOf(n), kind))
-          case _ => None
-        })
-    }
-    (folded ++ tail).toMap
-  }
+    readLog(root).txnStamps
+  def copiedFiles(root: Path): Seq[(Long, String, Long)] =
+    readLog(root).copiedFiles
+  def committedEntries(root: Path): Seq[(Long, String)] =
+    readLog(root).committedEntries
+  def liveEntries(root: Path, asOf: Option[Long]): Seq[(Long, String)] =
+    readLog(root).liveEntries(asOf)
+  def liveDvs(root: Path, asOf: Option[Long])
+      : Map[String, (String, Long)] = readLog(root).liveDvs(asOf)
+  def lastTxnVersion(root: Path, appId: String): Option[Long] =
+    readLog(root).lastTxnVersion(appId)
+  def epochForTimestamp(root: Path, millis: Long): Long =
+    readLog(root).epochForTimestamp(millis)
 
   /** `timestampAsOf` option value → epoch millis: a bare long, an
     * ISO-8601 instant (`2026-08-13T20:00:00Z`), or a session-style
@@ -1030,101 +1070,8 @@ object ArrowDataSource {
     }
   }
 
-  /** `TIMESTAMP AS OF` resolution: the greatest epoch whose commit
-    * stamp is at or before `millis` (Delta's contract). The scan is a
-    * FILTER over all epochs, not a prefix take: one non-monotone
-    * stamp (clock skew between commits, or mtime-fallback epochs
-    * interleaved with marker stamps) must not hide every later epoch
-    * whose stamp is eligible. Rapid commits inside one clock tick
-    * still resolve to the greatest epoch of the tick. */
-  def epochForTimestamp(root: Path, millis: Long): Long = {
-    val byEpoch = epochTimestamps(root).toSeq.sortBy(_._1)
-    require(byEpoch.nonEmpty,
-      s"arrow timestampAsOf: $root carries no commit log to resolve " +
-        "a timestamp against")
-    val eligible = byEpoch.filter(_._2 <= millis)
-    require(eligible.nonEmpty, {
-      val (e0, t0) = byEpoch.head
-      s"arrow timestampAsOf: $millis predates the table's first " +
-        s"known commit (epoch $e0 at $t0 = " +
-        s"${java.time.Instant.ofEpochMilli(t0)})"
-    })
-    eligible.last._1
-  }
-
   private def compactLine(en: LogEntry): String =
     s"${en.epoch}\t${manifestLine(en)}"
-
-  /** The full committed event history in epoch order: the latest
-    * compact snapshot plus every per-epoch manifest past it. One
-    * directory listing; O(1) snapshot read + O(tail) manifest reads,
-    * independent of how many epochs the log has lived. */
-  def committedHistory(root: Path): Seq[LogEntry] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val compactEpoch = names.filter(_.endsWith(".compact"))
-      .map(epochOf).sorted.lastOption
-    val snapshot = compactEpoch.toSeq.flatMap { e =>
-      Files.readAllLines(md.resolve(s"$e.compact")).asScala
-        .filterNot(_.startsWith("#")) // `#ts` commit-stamp headers
-        .map(parseCompactLine)
-    }
-    val tail = names.filter(_.endsWith(".manifest"))
-      .map(n => epochOf(n))
-      .filter(e => compactEpoch.forall(e > _))
-      .sorted
-      .flatMap(e => Files.readAllLines(md.resolve(s"$e.manifest")).asScala
-        .filterNot(_.startsWith("#")) // `#txn` writer-transaction headers
-        .map(parseManifestLine(e, _)))
-    snapshot ++ tail
-  }
-
-  /** Committed ADD events only — the streaming source's per-epoch
-    * delta view (what files each epoch contributed). */
-  def committedEntries(root: Path): Seq[(Long, String)] =
-    committedHistory(root).collect {
-      case en if !en.remove && en.dv.isEmpty => (en.epoch, en.rel)
-    }
-
-  /** The live `(addEpoch, rel)` set as of `asOf` (None = now): fold
-    * the history, a removal at `e2 <= asOf` cancelling the add at
-    * `e1 < e2`. This is what makes a DML commit ATOMIC for readers —
-    * the swap from old files to rewritten ones is one manifest rename,
-    * and until it lands every reader keeps resolving the old set.
-    * DV events neither add nor remove a file — they are skipped here
-    * and folded by [[liveDvs]]. */
-  def liveEntries(root: Path, asOf: Option[Long]): Seq[(Long, String)] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    committedHistory(root).foreach { en =>
-      if (asOf.forall(en.epoch <= _) && en.dv.isEmpty) {
-        if (en.remove) live.remove(en.rel)
-        else live.put(en.rel, en.epoch)
-      }
-    }
-    live.toSeq.map { case (rel, e) => (e, rel) }
-  }
-
-  /** The live deletion vector per file as of `asOf` (None = now):
-    * `rel → (dvRel, deletedCount)`. A dv event REPLACES the file's
-    * previous vector (vectors are cumulative — the writer unions old
-    * into new); removing OR re-adding the file clears it (a replaced
-    * file's rows start unmasked). Fold order within an epoch is line
-    * order — removes, adds, then dv events, as the commit writes
-    * them. */
-  def liveDvs(root: Path, asOf: Option[Long])
-      : Map[String, (String, Long)] = {
-    val dvs = scala.collection.mutable.LinkedHashMap
-      .empty[String, (String, Long)]
-    committedHistory(root).foreach { en =>
-      if (asOf.forall(en.epoch <= _)) en.dv match {
-        case Some(v) => dvs.put(en.rel, v); ()
-        case None => dvs.remove(en.rel); ()
-      }
-    }
-    dvs.toMap
-  }
 
   /** Highest committed epoch under `root`'s commit log, -1 when none —
     * the streaming source's bounded offset for manifest-carrying dirs. */
@@ -1153,15 +1100,26 @@ object ArrowDataSource {
     * any past epoch of an append-only sink can be re-read exactly:
     * reproduce the training mixture as of last Tuesday's epoch. Flat
     * directories have no commit log and refuse the option. */
-  def visibleIpcFiles(dir: String, asOf: Option[Long]): Seq[Path] = {
+  def visibleIpcFiles(dir: String, asOf: Option[Long]): Seq[Path] =
+    visibleIpcFiles(dir, asOf, sinkRoot(dir).map(readLog))
+
+  /** [[visibleIpcFiles]] resolved against an already-read log of
+    * `dir`'s sink root (None: a flat directory), for callers that fold
+    * more than the live set from the same read. The log is read BEFORE
+    * the directory walk: every file a committed epoch lists was
+    * renamed into place before its commit, so the later walk finds
+    * it. */
+  private[arrow] def visibleIpcFiles(dir: String, asOf: Option[Long],
+      log: Option[LogState]): Seq[Path] = {
     val files = listIpcFiles(dir)
-    sinkRoot(dir) match {
+    log match {
       case None =>
         require(asOf.isEmpty,
           s"epochAsOf: $dir carries no ${MetadataDirName} commit log " +
             "to time-travel over")
         files
-      case Some(root) =>
+      case Some(l) =>
+        val root = l.root
         asOf.foreach { e =>
           val h = travelHorizon(root)
           require(e >= h,
@@ -1169,7 +1127,7 @@ object ArrowDataSource {
               s"horizon $h — its files were reclaimed; earliest " +
               s"addressable version is $h")
         }
-        val resolved = liveEntries(root, asOf)
+        val resolved = l.liveEntries(asOf)
           .map { case (_, rel) => root.resolve(rel).normalize }
         val committed = resolved.map(_.toString).toSet
         val inside =
@@ -1237,7 +1195,8 @@ object ArrowDataSource {
     // time-travel horizon advances to the first epoch whose snapshot
     // is still byte-complete (recorded in `_horizon`; older versions
     // refuse instead of silently resolving short)
-    val all = committedHistory(root).filter(_.epoch <= epochId)
+    val log = readLog(root)
+    val all = log.history.filter(_.epoch <= epochId)
     val entries =
       if (!onlyExisting) all
       else {
@@ -1259,26 +1218,26 @@ object ArrowDataSource {
     // carry commit stamps through the fold: once the covered manifests
     // (and their `.ts` markers) are deleted below, the snapshot headers
     // are the only surviving source for TIMESTAMP AS OF resolution
-    val stamps = epochTimestamps(root).filter(_._1 <= epochId)
+    val stamps = log.epochTimestamps.filter(_._1 <= epochId)
       .toSeq.sorted.map { case (e, t) => s"#ts\t$e\t$t" }
-    val neutrals = neutralEpochs(root).filter(_ <= epochId)
+    val neutrals = log.neutralEpochs.filter(_ <= epochId)
       .toSeq.sorted.map(e => s"#neutral\t$e")
     // newest writer-transaction stamp per appId among folded epochs —
     // older stamps are dead (the replay gate only consults the max)
-    val txns = txnStamps(root).filter(_._1 <= epochId)
+    val txns = log.txnStamps.filter(_._1 <= epochId)
       .groupBy(_._2).values.map(_.maxBy(s => (s._3, s._1))).toSeq
       .sortBy(_._1).map { case (e, a, v) => s"#txn\t$e\t$a\t$v" }
     // EVERY ledgered COPY INTO key survives the fold (first epoch per
     // key wins): the skip-already-loaded check must keep answering
     // after the ingest manifests are reclaimed
-    val copies = copiedFiles(root).filter(_._1 <= epochId)
+    val copies = log.copiedFiles.filter(_._1 <= epochId)
       .groupBy(_._2).values.map(_.minBy(_._1)).toSeq
       .sortBy(c => (c._1, c._2))
       .map { case (e, k, sz) => s"#copy\t$e\t$k\t$sz" }
     // operation kinds survive the fold like neutral markers: the
     // change feed's pre/postimage tagging must keep answering for any
     // epoch still above the vacuum horizon
-    val ops = opKinds(root).filter(_._1 <= epochId)
+    val ops = log.opKinds.filter(_._1 <= epochId)
       .toSeq.sorted.map { case (e, k) => s"#op\t$e\t$k" }
     val ctmp = md.resolve(s"$epochId.compact.inprogress")
     Files.write(ctmp,
@@ -1355,10 +1314,7 @@ object ArrowDataSource {
       .map { case (a, v) => s"#txn\t$a\t$v" } ++
       Option(pendingCopies.get(root.toString)).toSeq.flatten
         .map { case (k, sz) => s"#copy\t$k\t$sz" } ++
-      opKind.toSeq.map { k =>
-        require(!k.exists("\t\n".contains(_)), s"bad op kind '$k'")
-        s"#op\t$k"
-      }
+      opKind.toSeq.map { k => requireLogField("op kind", k); s"#op\t$k" }
     // line order IS fold order within the epoch: removes, adds, then
     // dv events (so a replace-and-remask in one epoch lands masked)
     val lines = txnHeader ++

@@ -81,16 +81,18 @@ object ArrowDelete {
     val partCols = partSchema.fieldNames.toSet
     val partF = filters.filter(f => f.references.forall(partCols) &&
       FilterEval.supported(partSchema, f))
+    val rootP = Paths.get(root).toAbsolutePath.normalize
+    val log = ArrowDataSource.readLog(rootP)
     val candidates = ArrowDataSource.pruneByPartitionFilters(
-      ArrowDataSource.visibleIpcFiles(root), root, partSchema, partF)
+      ArrowDataSource.visibleIpcFiles(root, None, Some(log)), root,
+      partSchema, partF)
     if (candidates.isEmpty) return
+    val dvNow = log.liveDvs(None)
     if (ArrowDataSource.dvEnabled(root)) {
       deleteWhereMor(spark, root, partSchema, filters, baseEpoch,
-        candidates)
+        candidates, dvNow)
       return
     }
-    val rootP = Paths.get(root).toAbsolutePath.normalize
-    val dvNow = ArrowDataSource.liveDvs(rootP, None)
     val rootStr = root
     val fs = filters
     val ps = partSchema
@@ -133,9 +135,8 @@ object ArrowDelete {
     * petabyte rewrite. */
   private[arrow] def deleteWhereMor(spark: SparkSession, root: String,
       partSchema: StructType, filters: Seq[Filter], baseEpoch: Long,
-      candidates: Seq[Path]): Unit = {
+      candidates: Seq[Path], dvNow: Map[String, (String, Long)]): Unit = {
     val rootP = Paths.get(root).toAbsolutePath.normalize
-    val dvNow = ArrowDataSource.liveDvs(rootP, None)
     val rootStr = rootP.toString
     val fs = filters
     val ps = partSchema

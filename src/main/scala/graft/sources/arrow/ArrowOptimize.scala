@@ -382,8 +382,9 @@ object AutoCompact {
         // deletion-vectored files are skipped: their live row count is
         // smaller than the footer's and a rewrite here would need the
         // mask — OPTIMIZE handles those explicitly
-        val dvRels = ArrowDataSource.liveDvs(root, None).keySet
-        val small = ArrowDataSource.visibleIpcFiles(path)
+        val log = ArrowDataSource.readLog(root)
+        val dvRels = log.liveDvs(None).keySet
+        val small = ArrowDataSource.visibleIpcFiles(path, None, Some(log))
           .filterNot(f => scala.util.Try(root.relativize(
             f.toAbsolutePath.normalize).toString).toOption
             .exists(dvRels))

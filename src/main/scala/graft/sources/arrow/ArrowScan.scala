@@ -46,14 +46,17 @@ private[arrow] class FooterIndex(path: String,
     * REMOVED, which visibility resolution would hide) or the normal
     * manifest/as-of-resolved visible set. */
   lazy val files: Seq[java.nio.file.Path] =
-    explicit.getOrElse(ArrowDataSource.visibleIpcFiles(path, asOf))
+    explicit.getOrElse(ArrowDataSource.visibleIpcFiles(path, asOf, log))
+  private lazy val sink = ArrowDataSource.sinkRoot(path)
+  // ONE log read serves both the visible set and the deletion vectors,
+  // so the two always describe the same version of the table
+  private lazy val log = sink.map(ArrowDataSource.readLog)
   // Sidecar keys are TABLE-ROOT-relative: a read addressed at a
   // partition subdirectory must load (and relativize against) the sink
   // root's sidecar, or every lookup misses and planning silently pays
   // the per-file footer sweep the index exists to avoid.
   private lazy val root =
-    ArrowDataSource.sinkRoot(path).getOrElse(
-      Paths.get(path).toAbsolutePath.normalize)
+    sink.getOrElse(Paths.get(path).toAbsolutePath.normalize)
   // The write-time footer-stats sidecar: ONE metadata read replaces
   // the per-file footer sweep for every file it covers. Files it does
   // not cover (foreign writers, maintenance rewrites) fall back to a
@@ -77,15 +80,14 @@ private[arrow] class FooterIndex(path: String,
     * absolute file path → (absolute DV sidecar path, deleted count).
     * Empty for flat dirs and DV-free tables — every DV-aware gate
     * (agg/limit pushdown, stats, split planning) keys off this. */
-  lazy val dvs: Map[String, (String, Long)] =
-    ArrowDataSource.sinkRoot(path) match {
-      case Some(r) if ArrowDataSource.isTableLog(path) =>
-        ArrowDataSource.liveDvs(r, asOf).map { case (rel, (dvRel, n)) =>
-          r.resolve(rel).normalize.toString ->
-            (r.resolve(dvRel).normalize.toString, n)
-        }
-      case _ => Map.empty
-    }
+  lazy val dvs: Map[String, (String, Long)] = log match {
+    case Some(l) if ArrowDataSource.isTableLog(path) =>
+      l.liveDvs(asOf).map { case (rel, (dvRel, n)) =>
+        l.root.resolve(rel).normalize.toString ->
+          (l.root.resolve(dvRel).normalize.toString, n)
+      }
+    case _ => Map.empty
+  }
 }
 
 class ArrowScanBuilder(path: String, schema: StructType,
@@ -1132,8 +1134,9 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
     * is the consumer's job). */
   private def epochDeltaFiles(root: java.nio.file.Path, after: Long,
       upTo: Long): Seq[java.nio.file.Path] = {
+    val log = ArrowDataSource.readLog(root)
     if (!ignoreChanges)
-      ArrowDataSource.committedHistory(root).foreach { en =>
+      log.history.foreach { en =>
         if (en.remove && en.epoch > after && en.epoch <= upTo)
           throw new UnsupportedOperationException(
             s"arrow streaming source on $path: epoch ${en.epoch} " +
@@ -1156,7 +1159,7 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
     // fresh stream over a table with rewrite history delivers the
     // current snapshot (Delta's initial-snapshot semantics), not every
     // superseded generation ever committed
-    val files = ArrowDataSource.liveEntries(root, Some(upTo))
+    val files = log.liveEntries(Some(upTo))
       .collect { case (e, rel) if e > after =>
         root.resolve(rel).normalize }
       .filter(_.startsWith(prefix))

@@ -420,8 +420,8 @@ object GraftProcedures {
             "sinks and logged tables have epoch history"))
       // commit wall-clock per epoch (micros, TimestampType internal);
       // null for epochs predating stamping whose manifest is gone
-      val stamps = ArrowDataSource.epochTimestamps(root)
-      val rows = ArrowDataSource.committedHistory(root)
+      val log = ArrowDataSource.readLog(root)
+      val rows = log.history
         .groupBy(_.epoch).toSeq.sortBy(_._1)
         .map { case (epoch, entries) =>
           val (removes, rest) = entries.partition(_.remove)
@@ -436,7 +436,8 @@ object GraftProcedures {
           val masked = dvEvents.flatMap(_.dv.map(_._2)).sum
           new GenericInternalRow(Array[Any](
             epoch,
-            stamps.get(epoch).map(m => java.lang.Long.valueOf(m * 1000L))
+            log.epochTimestamps.get(epoch)
+              .map(m => java.lang.Long.valueOf(m * 1000L))
               .orNull,
             adds.length.toLong, bytes,
             removes.length.toLong, masked)): InternalRow
@@ -490,9 +491,10 @@ object GraftProcedures {
       // timestamp resolution rides the exact same `#ts` stamp index as
       // TIMESTAMP AS OF reads; epochForTimestamp refuses pre-first-
       // commit instants, the horizon check below refuses reclaimed ones
+      val log = ArrowDataSource.readLog(root)
       val target = tsArg match {
-        case Some(t) => ArrowDataSource.epochForTimestamp(root,
-          ArrowDataSource.parseTravelTimestamp(t))
+        case Some(t) =>
+          log.epochForTimestamp(ArrowDataSource.parseTravelTimestamp(t))
         case None => epochArg
       }
       require(target >= 0 && target <= latest,
@@ -503,9 +505,8 @@ object GraftProcedures {
         s"restore: epoch $target of $path predates the vacuum " +
           s"horizon $horizon — its files were reclaimed; earliest " +
           s"restorable epoch is $horizon")
-      val want = ArrowDataSource.liveEntries(root, Some(target))
-        .map(_._2).toSet
-      val have = ArrowDataSource.liveEntries(root, None).map(_._2).toSet
+      val want = log.liveEntries(Some(target)).map(_._2).toSet
+      val have = log.liveEntries(None).map(_._2).toSet
       val addSet = want -- have
       val adds = addSet.toSeq.sorted.map(r => root.resolve(r).toString)
       val removes = (have -- want).toSeq.sorted
@@ -515,8 +516,8 @@ object GraftProcedures {
       // (an add clears the vector), so a target vector re-commits; a
       // kept file whose vector must CLEAR cycles remove+add in the
       // same epoch (fold order: removes, adds, dv events).
-      val wantDv = ArrowDataSource.liveDvs(root, Some(target))
-      val haveDv = ArrowDataSource.liveDvs(root, None)
+      val wantDv = log.liveDvs(Some(target))
+      val haveDv = log.liveDvs(None)
       val dvRestores = scala.collection.mutable
         .ArrayBuffer.empty[(String, String, Long)]
       val dvClears = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1745,7 +1746,8 @@ object GraftProcedures {
       }
       // the window must be APPEND-ONLY: a sketch cannot subtract the
       // values a removal or deletion vector took away
-      ArrowDataSource.committedHistory(root).foreach { en =>
+      val log = ArrowDataSource.readLog(root)
+      log.history.foreach { en =>
         if ((en.remove || en.dv.isDefined) && en.epoch > priorEpoch &&
             en.epoch <= latest)
           throw new UnsupportedOperationException(
@@ -1754,7 +1756,7 @@ object GraftProcedures {
               "sketches only grow; run a full CALL analyze to " +
               "recompute over the current snapshot")
       }
-      val deltaRels = ArrowDataSource.committedEntries(root).collect {
+      val deltaRels = log.committedEntries.collect {
         case (e, rel) if e > priorEpoch && e <= latest => rel
       }.distinct
       lastAnalyzeFiles = deltaRels.size.toLong
@@ -1910,12 +1912,16 @@ object GraftProcedures {
       // listing (visibleIpcFiles intersects with what exists — a
       // dangling manifest entry would vanish from it silently, which
       // is exactly the corruption fsck exists to surface)
-      val files: Seq[Path] =
+      val log =
         if (ArrowDataSource.isTableLog(root.toString))
-          ArrowDataSource.liveEntries(root, None)
-            .map { case (_, rel) => root.resolve(rel).normalize }
-        else ArrowDataSource.listIpcFiles(root.toString)
+          Some(ArrowDataSource.readLog(root))
+        else None
+      val files: Seq[Path] = log match {
+        case Some(l) => l.liveEntries(None)
+          .map { case (_, rel) => root.resolve(rel).normalize }
+        case None => ArrowDataSource.listIpcFiles(root.toString)
           .map(_.toAbsolutePath.normalize)
+      }
       // 1. referenced data files exist and carry a parsable footer
       val schemas = files.flatMap { f =>
         if (!Files.isRegularFile(f)) { bad("file-exists", f.toString); None }
@@ -1948,25 +1954,24 @@ object GraftProcedures {
           }
       }
       // 3. live deletion vectors parse and fit their files
-      if (ArrowDataSource.isTableLog(root.toString))
-        ArrowDataSource.liveDvs(root, None).foreach {
-          case (rel, (dvRel, _)) =>
-            val dvAbs = root.resolve(dvRel).normalize
-            if (!Files.isRegularFile(dvAbs))
-              bad("dv-exists", s"$rel -> $dvRel")
-            else scala.util.Try(DeletionVectors.read(dvAbs)) match {
-              case scala.util.Failure(e) =>
-                bad("dv-parses", s"$dvRel: ${e.getMessage}")
-              case scala.util.Success(mask) =>
-                val fAbs = root.resolve(rel).normalize
-                scala.util.Try(ArrowDataSource.footerInfo(fAbs))
-                  .foreach { info =>
-                    if (mask.length > info.sizes.length)
-                      bad("dv-fits-file", s"$dvRel masks ${mask.length} " +
-                        s"batches but $rel has ${info.sizes.length}")
-                  }
-            }
-        }
+      log.foreach(_.liveDvs(None).foreach {
+        case (rel, (dvRel, _)) =>
+          val dvAbs = root.resolve(dvRel).normalize
+          if (!Files.isRegularFile(dvAbs))
+            bad("dv-exists", s"$rel -> $dvRel")
+          else scala.util.Try(DeletionVectors.read(dvAbs)) match {
+            case scala.util.Failure(e) =>
+              bad("dv-parses", s"$dvRel: ${e.getMessage}")
+            case scala.util.Success(mask) =>
+              val fAbs = root.resolve(rel).normalize
+              scala.util.Try(ArrowDataSource.footerInfo(fAbs))
+                .foreach { info =>
+                  if (mask.length > info.sizes.length)
+                    bad("dv-fits-file", s"$dvRel masks ${mask.length} " +
+                      s"batches but $rel has ${info.sizes.length}")
+                }
+          }
+      })
       // 4. every physical IPC file is listed by SOME epoch manifest:
       // a file NO epoch ever adopted is invisible to every reader —
       // silent data loss. The reachable producer is the
@@ -1974,15 +1979,14 @@ object GraftProcedures {
       // the bare directory renames its file AFTER a concurrent
       // initTableLog/mergeSchema-promotion snapshots the file list);
       // fsck turns that silence into a finding.
-      if (ArrowDataSource.isTableLog(root.toString)) {
+      log.foreach { l =>
         // ONE history pass: any file an epoch ever adopted appears as
         // an add (or remove) entry — O(history), not O(epochs²) of
         // per-epoch liveEntries folds. Files whose whole lifecycle
         // predates the latest log compaction read as unlisted too:
         // they are equally invisible to every reader and are exactly
         // the vacuum-pending debris the message points at.
-        val listed = ArrowDataSource.committedHistory(root)
-          .filter(_.dv.isEmpty).map(_.rel).toSet
+        val listed = l.history.filter(_.dv.isEmpty).map(_.rel).toSet
         ArrowDataSource.listIpcFiles(root.toString).foreach { f =>
           val rel = root.relativize(f.toAbsolutePath.normalize).toString
           if (!listed.contains(rel)) bad("file-listed",
